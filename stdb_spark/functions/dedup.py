@@ -156,18 +156,43 @@ def minhash_signatures(
         [F.col(key)], text_col, shingle_n,
     ).select(F.col(key), F.explode("_sh").alias("_s"))
     hs = ex.select(F.col(key), shingle_hash32(F.col("_s")).alias("_h"))
-    mins = hs.groupBy(key).agg(
-        *[
-            F.min(
-                (F.lit(MINHASH_A[i]) * F.col("_h") + F.lit(MINHASH_B[i]))
-                % F.lit(MINHASH_PRIME)
-            ).alias(f"_m{i}")
-            for i in range(num_hashes)
-        ]
+    # the K min() partials and the array around them are ONE SQL
+    # string, so the py4j cost of building them does not grow with K
+    mins = ", ".join(
+        f"min(({MINHASH_A[i]} * _h + {MINHASH_B[i]}) % {MINHASH_PRIME})"
+        for i in range(num_hashes)
     )
-    return mins.select(
-        F.col(key), F.array(*[F.col(f"_m{i}") for i in range(num_hashes)]).alias("sig")
+    return hs.groupBy(key).agg(F.expr(f"array({mins}) AS sig"))
+
+
+def _checked_sig(sigs: DataFrame, nb: int, r: int) -> DataFrame:
+    """In-plan length guard (no extra job — the lineage may be the whole
+    minhash computation): any row whose signature is shorter than
+    ``nb * r`` aborts the action instead of silently mass-bucketing."""
+    return sigs.withColumn(
+        "sig",
+        F.when(F.size("sig") >= nb * r, F.col("sig")).otherwise(
+            F.raise_error(
+                F.lit(
+                    f"bands*rows_per_band = {nb * r} exceeds the minhash "
+                    "signature length — excess bands would slice empty "
+                    "and bucket ALL docs together"
+                )
+            )
+        ),
     )
+
+
+def _band_buckets(nb: int, r: int) -> Column:
+    """``explode`` of one (band, bucket) struct per band, as one SQL
+    string: bucket = md5 of the band's ``r`` signature values joined by
+    commas."""
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bucket', md5(array_join("
+        f"transform(slice(sig, {b * r + 1}, {r}), _lx -> CAST(_lx AS STRING)), ',')))"
+        for b in range(nb)
+    )
+    return F.expr(f"explode(array({bands})) AS bb")
 
 
 def minhash_lsh_candidates(
@@ -193,45 +218,8 @@ def minhash_lsh_candidates(
     an out-of-range slice would return EMPTY arrays, hashing every doc
     into one shared md5('') bucket per excess band — the silent
     all-pairs quadratic blowup this check exists to prevent."""
-    nb = bands
-    r = rows_per_band
-    # in-plan guard (no extra job — the lineage may be the whole
-    # minhash computation): any row with a too-short signature aborts
-    # the action instead of silently mass-bucketing
-    sigs = sigs.withColumn(
-        "sig",
-        F.when(
-            F.size("sig") >= nb * r, F.col("sig")
-        ).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"bands*rows_per_band = {nb * r} exceeds the minhash "
-                    "signature length — excess bands would slice empty "
-                    "and bucket ALL docs together"
-                )
-            )
-        ),
-    )
-    banded = sigs.select(
-        key,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.md5(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("sig", b * r + 1, r), lambda x: x.cast("string")
-                                ),
-                                ",",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for b in range(nb)
-                ]
-            )
-        ).alias("bb"),
+    banded = _checked_sig(sigs, bands, rows_per_band).select(
+        key, _band_buckets(bands, rows_per_band)
     ).select(key, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     # postings-list pair generation (one shuffle) instead of a self-join
     # that would recompute the signature pipeline for both sides
@@ -286,41 +274,8 @@ def minhash_lsh_estimates(
     standard pipeline runs exact-dedup first, which removes the hot
     buckets entirely); the in-repo eval callers run uncapped
     deliberately for exact recall at bounded eval scale."""
-    nb, r = bands, rows_per_band
-    sigs = sigs.withColumn(
-        "sig",
-        F.when(F.size("sig") >= nb * r, F.col("sig")).otherwise(
-            F.raise_error(
-                F.lit(
-                    f"bands*rows_per_band = {nb * r} exceeds the minhash "
-                    "signature length — excess bands would slice empty "
-                    "and bucket ALL docs together"
-                )
-            )
-        ),
-    )
-    banded = sigs.select(
-        F.col(key),
-        F.col("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bd).alias("band"),
-                        F.md5(
-                            F.array_join(
-                                F.transform(
-                                    F.slice("sig", bd * r + 1, r),
-                                    lambda x: x.cast("string"),
-                                ),
-                                ",",
-                            )
-                        ).alias("bucket"),
-                    )
-                    for bd in range(nb)
-                ]
-            )
-        ).alias("bb"),
+    banded = _checked_sig(sigs, bands, rows_per_band).select(
+        F.col(key), F.col("sig"), _band_buckets(bands, rows_per_band)
     ).select(
         F.col(key), F.col("sig"), F.col("bb.band").alias("band"),
         F.col("bb.bucket").alias("bucket"),
@@ -784,7 +739,7 @@ def embedding_near_duplicates(
     cond = F.col(f"a.{key}") < F.col(f"b.{key}")
     if block_col:
         cond = cond & (F.col(f"a.{block_col}") == F.col(f"b.{block_col}"))
-    cos = cosine_expr(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"))
+    cos = cosine_expr(f"a.{vec_col}", f"b.{vec_col}")
     return (
         a.join(b, cond)
         .select(

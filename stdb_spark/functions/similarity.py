@@ -11,14 +11,22 @@ Two tiers:
   replaces the full cross product, turning 100 TB x query into a
   uniform-key hash join.
 
-Dot products use a sequential left fold (``F.aggregate``) over doubles —
-the same associativity order an external oracle computes with a written
-out sum, so results are bit-reproducible.
+Dot products use a sequential left fold (``aggregate`` over ``zip_with``)
+in doubles — the same associativity order an external oracle computes
+with a written-out sum, so results are bit-reproducible.  The fold, and
+every wide literal vector or matrix (query vectors, hyperplanes,
+centroids, distance tables), is emitted as Spark SQL text and wrapped in
+one ``F.expr``: the JVM parses it in a single call, where building the
+same tree from ``F.lit``/lambda Column objects costs a py4j round trip
+per literal.  Doubles render as their shortest round-trip ``repr`` with
+the ``D`` suffix, so the parsed literals are the same bits.
 """
 
 from __future__ import annotations
 
 import hashlib
+import math
+import numbers
 import struct
 
 import pandas as pd
@@ -27,27 +35,78 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def dot_expr(a: Column, b: Column) -> Column:
-    """Sequential-fold dot product in float64."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _sql_lit(x) -> str:
+    """SQL literal text for one Python number.  A finite float becomes
+    ``repr(x) + "D"`` (shortest round-trip digits, DOUBLE type — the
+    JVM parses back the same bits); an int stays bare, which types as
+    INT or BIGINT exactly as ``F.lit`` does.  Spark SQL has no literal
+    for NaN or infinities, so they are refused."""
+    if isinstance(x, numbers.Integral):
+        return str(int(x))
+    f = float(x)
+    if not math.isfinite(f):
+        raise ValueError(f"no SQL literal for non-finite value {f!r}")
+    return repr(f) + "D"
+
+
+def _sql_array(xs) -> str:
+    """``array(...)`` literal text; nested lists become nested arrays."""
+    return "array(" + ", ".join(
+        _sql_array(x) if isinstance(x, (list, tuple)) else _sql_lit(x) for x in xs
+    ) + ")"
+
+
+def _vec_sql(v) -> str:
+    """A vector operand as SQL text: a column name (``embedding``, or
+    qualified ``a.embedding``), each part backtick-quoted, or a Python
+    list of floats rendered as one array literal."""
+    if isinstance(v, str):
+        return ".".join("`" + p.replace("`", "``") + "`" for p in v.split("."))
+    return _sql_array([float(x) for x in v])
+
+
+# lambda variables carry a prefix no column of ours uses, because a
+# lambda variable shadows a same-named column inside its body
+_FOLD_SUM = "0.0D, (_lacc, _lx) -> _lacc + _lx"
+
+
+def _dot_sql(a, b) -> str:
+    return (
+        f"aggregate(zip_with({_vec_sql(a)}, {_vec_sql(b)}, "
+        "(_lx, _ly) -> CAST(_lx AS DOUBLE) * CAST(_ly AS DOUBLE)), "
+        f"{_FOLD_SUM})"
     )
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+def _norm_sql(a) -> str:
+    return (
+        f"sqrt(aggregate(transform({_vec_sql(a)}, "
+        f"_lx -> CAST(_lx AS DOUBLE) * CAST(_lx AS DOUBLE)), {_FOLD_SUM}))"
+    )
+
+
+def dot_expr(a, b) -> Column:
+    """Sequential-fold dot product in float64.  ``a`` and ``b`` are each
+    a column name or a Python list of floats."""
+    return F.expr(_dot_sql(a, b))
+
+
+def norm_expr(a) -> Column:
+    return F.expr(_norm_sql(a))
+
+
+def cosine_expr(a, b) -> Column:
+    return F.expr(f"{_dot_sql(a, b)} / ({_norm_sql(a)} * {_norm_sql(b)})")
+
+
+def _packed_bits(conds) -> Column:
+    """One long whose bit j is set where SQL condition j holds."""
+    return F.expr(
+        " | ".join(
+            f"CASE WHEN {c} THEN shiftleft(CAST(1 AS BIGINT), {j}) ELSE CAST(0 AS BIGINT) END"
+            for j, c in enumerate(conds)
         )
     )
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
 def brute_force_top_k(
@@ -59,8 +118,7 @@ def brute_force_top_k(
 ) -> DataFrame:
     """Exact cosine top-k for one query vector: scan + per-partition
     top-k (Spark's TakeOrdered) — no shuffle of the full table."""
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         df.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -128,7 +186,7 @@ def ann_int8_top_k(
     qscale, qvec = quantize_query_int8(query_vec)
     dscale = int8_scale_expr(F.col(vec_col))
     dvec = int8_quantize_expr(F.col(vec_col), dscale)
-    qarr = F.array(*[F.lit(int(x)) for x in qvec])
+    qarr = F.expr(_sql_array(qvec))
     int_dot = F.aggregate(
         F.zip_with(dvec, qarr, lambda a, b: (a.cast("long") * b.cast("long"))),
         F.lit(0).cast("long"),
@@ -180,7 +238,7 @@ def brute_force_top_k_many(
     and the rank runs skew-free via the (query, partition)-cell local
     phase (see _local_then_global_top_k)."""
     joined = df.crossJoin(F.broadcast(queries.select(qkey, F.col(vec_col).alias("_qv"))))
-    cos = cosine_expr(F.col(vec_col), F.col("_qv"))
+    cos = cosine_expr(vec_col, "_qv")
     scored = joined.select(qkey, key, cos.alias("cosine"))
     return _local_then_global_top_k(scored, qkey, key, k)
 
@@ -210,7 +268,7 @@ def knn_classify(
     joined = corpus.crossJoin(
         F.broadcast(queries.select(F.col(qkey), F.col(vec_col).alias("_qv")))
     )
-    cos = cosine_expr(F.col(vec_col), F.col("_qv"))
+    cos = cosine_expr(vec_col, "_qv")
     wl = Window.partitionBy(qkey, F.spark_partition_id()).orderBy(
         F.col("cosine").desc(), F.col(key)
     )
@@ -250,17 +308,10 @@ def _hyperplane(dim: int, seed: int) -> list[float]:
 
 def lsh_signature_col(vec_col: str, dim: int, n_planes: int, table: int = 0) -> Column:
     """Bit-pattern of signs of dot(vec, hyperplane_j) packed into a long."""
-    bits = []
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(x) for x in _hyperplane(dim, table * 1000 + j)])
-        bits.append(
-            F.when(dot_expr(F.col(vec_col), plane) >= 0, F.shiftleft(F.lit(1).cast("long"), j))
-            .otherwise(F.lit(0).cast("long"))
-        )
-    sig = bits[0]
-    for b in bits[1:]:
-        sig = sig.bitwiseOR(b)
-    return sig
+    return _packed_bits(
+        f"{_dot_sql(vec_col, _hyperplane(dim, table * 1000 + j))} >= 0"
+        for j in range(n_planes)
+    )
 
 
 def lsh_top_k(
@@ -277,21 +328,13 @@ def lsh_top_k(
     recall, n_planes for selectivity.  At scale, precompute signatures
     as table columns (write-time) so queries touch only bucket rows."""
     dim = len(query_vec)
-    import numpy as np  # local, driver-side only for the query signature
-
     cands = None
-    for t in range(n_tables):
+    for t, qsig in enumerate(query_lsh_signatures(query_vec, n_planes, n_tables)):
         sig = lsh_signature_col(vec_col, dim, n_planes, t)
-        qsig = 0
-        for j in range(n_planes):
-            plane = _hyperplane(dim, t * 1000 + j)
-            if float(np.dot(np.array(query_vec, dtype="float64"), np.array(plane))) >= 0:
-                qsig |= 1 << j
         bucket = df.filter(sig == F.lit(qsig))
         cands = bucket if cands is None else cands.unionAll(bucket)
     cands = cands.dropDuplicates([key])
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -359,8 +402,7 @@ def lsh_top_k_presigned(
         c = F.col(f"{prefix}{t}") == F.lit(qs)
         cond = c if cond is None else cond | c
     cands = df.filter(cond)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -412,8 +454,7 @@ def ivf_top_k(
         scored.append((float(np.dot(c, qv)) / denom if denom else -1.0, row[cell_col]))
     probe = [lbl for _, lbl in sorted(scored, reverse=True)[:n_probe]]
     cands = df.filter(F.col(cell_col).isin(probe))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -425,14 +466,12 @@ def _assign_cells_expr(vec_col: str, centroids: list[list[float]]) -> Column:
     """0-based index of the nearest centroid (squared-L2 argmin, first
     index on ties).  Centroids embed as literals, so the whole argmin is
     one JVM expression per row — k dot products, no Python, no shuffle."""
-    scores = []
-    for c in centroids:
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        c2 = float(sum(x * x for x in c))
-        # |x - c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 is constant per row
-        scores.append(F.lit(c2) - F.lit(2.0) * dot_expr(F.col(vec_col), lit))
-    arr = F.array(*scores)
-    return (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
+    # |x - c|^2 = |x|^2 - 2 x.c + |c|^2; |x|^2 is constant per row
+    arr = "array(" + ", ".join(
+        f"{_sql_lit(float(sum(x * x for x in c)))} - 2.0D * {_dot_sql(vec_col, c)}"
+        for c in centroids
+    ) + ")"
+    return F.expr(f"CAST(array_position({arr}, array_min({arr})) - 1 AS INT)")
 
 
 def kmeans_fit(
@@ -569,8 +608,7 @@ def ivf_top_k_trained(
     cands = with_ivf_cells(df, centroids, vec_col).filter(
         F.col("cell").isin(probe)
     )
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -806,21 +844,17 @@ def pq_codes(
     write-time compression step.  Each subspace assignment is the same
     JVM argmin expression the IVF path uses; fully map-side, zero
     shuffles."""
-    m = len(codebooks)
     sub = len(codebooks[0][0])
     cells = []
     for j, book in enumerate(codebooks):
-        sliced = F.slice(F.col(vec_col), j * sub + 1, sub)
-        dists = F.transform(
-            F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in book]),
-            lambda c: F.aggregate(
-                F.zip_with(sliced, c, lambda a, b: (a - b) * (a - b)),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ),
+        book_sql = _sql_array([[float(x) for x in c] for c in book])
+        dists = (
+            f"transform({book_sql}, _lc -> aggregate(zip_with("
+            f"slice({_vec_sql(vec_col)}, {j * sub + 1}, {sub}), _lc, "
+            f"(_la, _lb) -> (_la - _lb) * (_la - _lb)), {_FOLD_SUM}))"
         )
-        cells.append(F.array_position(dists, F.array_min(dists)).cast("int") - 1)
-    return df.select(F.col(key), F.array(*cells).alias("code"))
+        cells.append(f"CAST(array_position({dists}, array_min({dists})) AS INT) - 1")
+    return df.select(F.col(key), F.expr(f"array({', '.join(cells)})").alias("code"))
 
 
 def pq_adc_top_k(
@@ -845,17 +879,10 @@ def pq_adc_top_k(
         table.append(
             [sum((a - b) * (a - b) for a, b in zip(q, c)) for c in book]
         )
-    tbl = F.array(
-        *[F.array(*[F.lit(float(x)) for x in row]) for row in table]
-    )
-    score = F.aggregate(
-        F.zip_with(
-            tbl,
-            F.col("code"),
-            lambda row, c: F.element_at(row, c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    tbl = _sql_array([[float(x) for x in row] for row in table])
+    score = F.expr(
+        f"aggregate(zip_with({tbl}, `code`, (_lr, _lc) -> element_at(_lr, _lc + 1)),"
+        f" {_FOLD_SUM})"
     )
     return (
         codes.select(F.col(key), score.alias("adc_dist2"))
@@ -1049,7 +1076,7 @@ def _assign_q_expr(qvec: Column, centroids: list[list[int]]) -> Column:
     returns the first match)."""
     scores = []
     for cvec in centroids:
-        lit = F.array(*[F.lit(int(v)).cast("long") for v in cvec])
+        lit = F.expr(f"CAST({_sql_array([int(v) for v in cvec])} AS ARRAY<BIGINT>)")
         scores.append(
             F.aggregate(
                 F.zip_with(qvec, lit, lambda a, b: (a - b) * (a - b)),
@@ -1208,8 +1235,7 @@ def ivf_top_k_exact(
     cands = df.withColumn(
         "cell", assign_cells_exact(centroids, vec_col, qscale)
     ).filter(F.col("cell").isin(probe))
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), q)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -1242,15 +1268,15 @@ def semantic_dedup_pairs_exact(
         "cell",
         F.col(key).alias("a"),
         F.col(vec_col).alias("_va"),
-        norm_expr(F.col(vec_col)).alias("_na"),
+        norm_expr(vec_col).alias("_na"),
     )
     b = cells.select(
         "cell",
         F.col(key).alias("b"),
         F.col(vec_col).alias("_vb"),
-        norm_expr(F.col(vec_col)).alias("_nb"),
+        norm_expr(vec_col).alias("_nb"),
     )
-    cos = dot_expr(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))
+    cos = dot_expr("_va", "_vb") / (F.col("_na") * F.col("_nb"))
     # Catalyst pushes the cosine threshold INTO the join condition —
     # desirable (only surviving pairs ever leave the join) — which
     # means the whole quadratic fold executes inside the join stage.
@@ -1355,13 +1381,10 @@ def pq_adc_top_k_exact(
         table.append(
             [sum((a - b) * (a - b) for a, b in zip(qs, c)) for c in book]
         )
-    tbl = F.array(
-        *[F.array(*[F.lit(int(x)).cast("long") for x in row]) for row in table]
-    )
-    score = F.aggregate(
-        F.zip_with(tbl, F.col("code"), lambda row, c: F.element_at(row, c + 1)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
+    tbl = f"CAST({_sql_array([[int(x) for x in row] for row in table])} AS ARRAY<ARRAY<BIGINT>>)"
+    score = F.expr(
+        f"aggregate(zip_with({tbl}, `code`, (_lr, _lc) -> element_at(_lr, _lc + 1)),"
+        " CAST(0 AS BIGINT), (_lacc, _lx) -> _lacc + _lx)"
     )
     return (
         codes.select(F.col(key), score.alias("adc_dist2"))
@@ -1408,8 +1431,7 @@ def ivf_label_top_k_exact(
     )
     probe = [lbl for _, lbl in scored[:n_probe]]
     cands = df.filter(F.col(label_col).isin(probe))
-    qarr = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = cosine_expr(F.col(vec_col), qarr)
+    cos = cosine_expr(vec_col, query_vec)
     return (
         cands.select(F.col(key), cos.alias("cosine"))
         .orderBy(F.col("cosine").desc(), F.col(key))
@@ -1696,12 +1718,11 @@ def mmr_select(
     multiply per lambda term — so scores reproduce bit-for-bit."""
     import math
 
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     pool = (
         df.select(
             F.col(key).alias("vec_id"),
             F.col(vec_col).alias("vec"),
-            cosine_expr(F.col(vec_col), q).alias("rel"),
+            cosine_expr(vec_col, query_vec).alias("rel"),
         )
         .orderBy(F.col("rel").desc(), F.col("vec_id"))
         .limit(pool_n)
@@ -1759,7 +1780,7 @@ def mmr_select(
     return spark.createDataFrame(picked, MMR_SCHEMA)
 
 
-def binary_quantize_expr(vec_col: Column, dim: int) -> Column:
+def binary_quantize_expr(vec_col: str, dim: int) -> Column:
     """Sign-bit binary quantization: bit j set when v[j] > 0 — 64 dims
     pack into ONE long, a 32x storage/shuffle cut over float32 (the
     compression modern vector stores call BQ).  Unlike LSH
@@ -1771,14 +1792,8 @@ def binary_quantize_expr(vec_col: Column, dim: int) -> Column:
         # silently collide with bit j-64 — the contract is ONE long per
         # vector (r8 advice)
         raise ValueError(f"binary_quantize_expr packs at most 64 dims into one long, got {dim}")
-    bits = None
-    for j in range(dim):
-        b = F.when(
-            vec_col.getItem(j).cast("double") > 0.0,
-            F.shiftleft(F.lit(1).cast("long"), j),
-        ).otherwise(F.lit(0).cast("long"))
-        bits = b if bits is None else bits.bitwiseOR(b)
-    return bits
+    v = _vec_sql(vec_col)
+    return _packed_bits(f"CAST({v}[{j}] AS DOUBLE) > 0.0D" for j in range(dim))
 
 
 def ann_binary_top_k(
@@ -1804,7 +1819,7 @@ def ann_binary_top_k(
             qbits |= 1 << j
     if qbits >= 1 << 63:
         qbits -= 1 << 64
-    code = binary_quantize_expr(F.col(vec_col), dim)
+    code = binary_quantize_expr(vec_col, dim)
     ham = F.bit_count(code.bitwiseXOR(F.lit(qbits).cast("long")))
     return (
         df.select(F.col(key), ham.cast("long").alias("hamming"))

@@ -706,7 +706,9 @@ def bm25_topk(
         F.count("*"),
         F.expr("CAST(sum(CAST(dl AS DECIMAL(28,10))) AS DOUBLE)"),
     ).first()
-    avgdl = sdl / float(n_docs)
+    # an empty collection has no average length (sdl is NULL, n_docs 0);
+    # nothing joins to the postings then, so any value leaves zero rows
+    avgdl = sdl / float(n_docs) if n_docs else 0.0
     hits = index.filter(F.col("term").isin(terms))
     dfreq = hits.groupBy("term").agg(F.count("*").alias("df"))
     idf = F.log(

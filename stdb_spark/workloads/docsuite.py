@@ -1077,8 +1077,7 @@ SELECT doc_id, source FROM (
 # (label, input-partition) cells first.
 def _topk_per_label(spark, sf):
     df = model.load_table(spark, sf, "embeddings")
-    q = F.array(*[F.lit(float(x)) for x in _QVEC])
-    cos = similarity.cosine_expr(F.col("embedding"), q)
+    cos = similarity.cosine_expr("embedding", _QVEC)
     scored = df.select("label", "vec_id", cos.alias("cosine"))
     return similarity._local_then_global_top_k(scored, "label", "vec_id", 3)
 
@@ -2052,7 +2051,7 @@ def _hybrid_neardup(spark, sf):
         .select(
             "a",
             "b",
-            similarity.cosine_expr(F.col("_ea"), F.col("_eb")).alias("cosine"),
+            similarity.cosine_expr("_ea", "_eb").alias("cosine"),
         )
     )
 
@@ -2859,11 +2858,10 @@ def _doc_hybrid_search(spark, sf):
     idx = inverted_index(docs)
     cands = bm25_topk(idx, _doc_lengths(spark, sf), ["the", "and"], k=50)
     emb = model.load_table(spark, sf, "embeddings")
-    q = F.array(*[F.lit(float(x)) for x in _QVEC])
     joined = emb.join(
         F.broadcast(cands), emb.vec_id == cands.doc_id
     ).select(
-        "doc_id", "bm25", similarity.cosine_expr(F.col("embedding"), q).alias("cosine")
+        "doc_id", "bm25", similarity.cosine_expr("embedding", _QVEC).alias("cosine")
     )
     return joined.orderBy(
         F.col("cosine").desc(), F.col("bm25").desc(), F.col("doc_id").asc()
@@ -3316,7 +3314,7 @@ FROM p JOIN q USING (doc_id) JOIN k USING (doc_id)
 _q(
     "emb_norm_stats",
     lambda spark, sf: model.load_table(spark, sf, "embeddings")
-    .select(similarity.norm_expr(F.col("embedding")).alias("nrm"))
+    .select(similarity.norm_expr("embedding").alias("nrm"))
     .agg(
         F.count("*").cast("long").alias("n"),
         F.expr("percentile(nrm, 0.05)").alias("p05"),
@@ -3806,7 +3804,7 @@ def _emb_cosine_hist(spark, sf):
     pairs = a.join(
         b, ((F.col("ia") * 7 + 3) % F.col("_n")) == F.col("ib")
     ).filter(F.col("ia") != F.col("ib"))
-    cos = similarity.cosine_expr(F.col("ea"), F.col("eb"))
+    cos = similarity.cosine_expr("ea", "eb")
     band = (
         F.when(cos >= 0.5, "ge_05")
         .when(cos >= 0.2, "02_05")
@@ -3945,7 +3943,7 @@ def _emb_label_margin(spark, sf):
     pairs = a.join(
         b, ((F.col("ia") * 7 + 3) % F.col("_n")) == F.col("ib")
     ).filter(F.col("ia") != F.col("ib"))
-    cos = similarity.cosine_expr(F.col("ea"), F.col("eb"))
+    cos = similarity.cosine_expr("ea", "eb")
     grp = F.when(F.col("la") == F.col("lb"), "intra").otherwise("inter")
     return (
         pairs.select(grp.alias("pair_kind"), cos.alias("_c"))
@@ -3988,7 +3986,7 @@ _q(
     "emb_norm_by_label",
     lambda spark, sf: model.load_table(spark, sf, "embeddings")
     .select(
-        "label", similarity.norm_expr(F.col("embedding")).alias("nrm")
+        "label", similarity.norm_expr("embedding").alias("nrm")
     )
     .groupBy("label")
     .agg(

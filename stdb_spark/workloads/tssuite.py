@@ -244,9 +244,7 @@ def _stream_replay(spark, sf):
         sdf, step="1 day", max_lateness="1 hour", extra_keys=("user",)
     )
     name = "stream_replay_sink"
-    spark.catalog.dropTempView(name) if name in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
+    spark.catalog.dropTempView(name)
     q = (
         out.writeStream.format("memory")
         .queryName(name)
@@ -313,8 +311,7 @@ def _replay_stream(
         "maxFilesPerTrigger", str(files_per_trigger)
     ).parquet(path)
     out = transform(sdf)
-    if sink_name in [t.name for t in spark.catalog.listTables()]:
-        spark.catalog.dropTempView(sink_name)
+    spark.catalog.dropTempView(sink_name)
     q = (
         out.writeStream.format("memory")
         .queryName(sink_name)
@@ -477,8 +474,7 @@ def _stream_resp_events(spark, sf):
         "body",
     )
     sink = "stream_resp_events_sink"
-    if sink in [t.name for t in spark.catalog.listTables()]:
-        spark.catalog.dropTempView(sink)
+    spark.catalog.dropTempView(sink)
     q = (
         out.writeStream.format("memory")
         .queryName(sink)
@@ -626,8 +622,7 @@ def _stream_resp_dict(spark, sf):
         "value",
     )
     sink = "stream_resp_dict_sink"
-    if sink in [t.name for t in child.catalog.listTables()]:
-        child.catalog.dropTempView(sink)
+    child.catalog.dropTempView(sink)
     q = (
         out.writeStream.format("memory")
         .queryName(sink)

@@ -958,12 +958,10 @@ def test_binary_quantize_rejects_dim_over_64(spark):
     shift amount mod 64, so dim > 64 must fail loudly (r8 advice)."""
     import pytest
 
-    from pyspark.sql import functions as F
-
     from stdb_spark.functions import similarity
 
     with pytest.raises(ValueError):
-        similarity.binary_quantize_expr(F.col("v"), 65)
+        similarity.binary_quantize_expr("v", 65)
     df = spark.createDataFrame([(1, [0.1] * 65)], "vec_id long, embedding array<float>")
     with pytest.raises(ValueError):
         similarity.ann_binary_top_k(df, [0.1] * 65, k=1)

@@ -1194,6 +1194,36 @@ def test_bm25_ranks_term_dense_doc_first(spark):
     assert got[0].bm25 > got[1].bm25 > 0
 
 
+def test_bm25_and_hybrid_search_on_empty_documents(spark, tmp_path):
+    """An empty documents table has no average length (its sum is NULL
+    over zero rows): BM25 and the hybrid search built on it must return
+    zero rows with the usual schema, not crash on the driver."""
+    from stdb_spark.functions.text import bm25_topk, inverted_index, tokens_col
+    from stdb_spark.workloads import QUERIES
+
+    docs = spark.createDataFrame(
+        [], "doc_id long, text string, lang string, source string, n_chars long"
+    )
+    dl = docs.select("doc_id", F.size(tokens_col("text")).cast("long").alias("dl"))
+    got = bm25_topk(inverted_index(docs), dl, ["the", "and"], k=10)
+    assert got.collect() == []
+    assert got.dtypes == [("doc_id", "bigint"), ("bm25", "double")]
+
+    sf = str(tmp_path)
+    docs.write.parquet(f"{sf}/documents.parquet")
+    spark.createDataFrame(
+        [(i, [0.1 * (i + j) for j in range(64)], i % 3) for i in range(5)],
+        "vec_id long, embedding array<float>, label int",
+    ).write.parquet(f"{sf}/embeddings.parquet")
+    for name, cols in (
+        ("doc_bm25_search", ["doc_id", "bm25"]),
+        ("doc_hybrid_search", ["doc_id", "bm25", "cosine"]),
+    ):
+        out = QUERIES[name](spark, sf)
+        assert out.collect() == [], name
+        assert out.columns == cols, name
+
+
 def test_centroid_outliers_flags_planted_far_vector(spark):
     import random
 
